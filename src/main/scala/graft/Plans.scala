@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * queries, as committed evidence of the plan shapes the engine relies
   * on (pushdown, pruning, broadcast, codegen spans, top-k). PlanSpec
   * asserts these properties as tests; this artifact makes them
-  * readable. Usage: runMain graft.Plans > PLANS.md
+  * readable. Usage, from the repository root: runMain graft.Plans
+  * (writes PLANS.md; scratch goes under target/).
   */
 object Plans {
   import graft.pipeline._
@@ -16,7 +17,7 @@ object Plans {
     val spark = BenchPipeline.session(8)
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "plans").toString
+      java.nio.file.Paths.get("target"), "plans").toString
     Synth.writeTable(spark, s"$dir/input", 42L, 50L)
     val out = new StringBuilder
 
@@ -156,7 +157,7 @@ object Plans {
       })
 
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/PLANS.md"), out.toString)
+      java.nio.file.Paths.get("PLANS.md"), out.toString)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     spark.stop()
   }

@@ -85,7 +85,7 @@ object Discover {
   /** As [[listInputFiles]], with REOPEN detection for sealed days: a day
     * in `sealedBeforeMs` is pruned from the walk only while its
     * partition directory's mtime PREDATES the recorded observation
-    * stamp (Lineage.observationsAt). A directory modified at-or-after
+    * stamp (Lineage.stateAt). A directory modified at-or-after
     * the stamp means a file landed after the last cycle that audited
     * the day — such a day is still not listed (every row in it is
     * behind the end-of-day watermark, so the delta scan would read and

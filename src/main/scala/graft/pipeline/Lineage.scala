@@ -17,8 +17,10 @@ import org.apache.spark.sql.functions._
   * succeeded (the commit-after-publish ordering mirrors the reference's
   * temp-file -> finalize -> sincedb.write sequence, s3.rb:380-388).
   *
-  * `readState` is called once per run — the reference's 3.8.2 fix
-  * ("read sincedb once per cycle, not per object", CHANGELOG.md:8).
+  * One form per operation: [[stateAt]] (called once per run — the
+  * reference's 3.8.2 fix, "read sincedb once per cycle, not per
+  * object", CHANGELOG.md:8), [[committedBatchesAt]], [[commitAt]] and
+  * [[compactAt]], each on a lineage dir ([[path]] or [[dirFor]]).
   */
 object Lineage {
 
@@ -61,33 +63,28 @@ object Lineage {
     * yet (the "empty sincedb file reads as epoch, no exception" semantic,
     * sincedb_spec.rb:14-16, s3.rb:455-459).
     */
-  def read(spark: SparkSession, sinkRoot: String): DataFrame =
-    readAt(spark, path(sinkRoot))
-
-  def readAt(spark: SparkSession, dir: String): DataFrame = {
+  private def readAt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     if (exists(spark, dir)) spark.read.parquet(dir)
     else spark.emptyDataset[Commit].toDF()
   }
 
-  /** Per-day high watermarks, collected to a driver map (small: one entry
-    * per partition day ever committed).
-    */
-  def watermarks(spark: SparkSession, sinkRoot: String): Map[String, Timestamp] =
-    watermarksAt(spark, path(sinkRoot))
-
-  def watermarksAt(spark: SparkSession, dir: String): Map[String, Timestamp] =
-    stateAt(spark, dir)._1 // one definition incl. the corrupt-row check
-
-  /** Per-day observation stamps: the max `committed_at` over each day's
-    * commit rows, in epoch millis. `committed_at` is stamped at CYCLE
-    * START (before any listing), so it lower-bounds every file the
-    * cycle's listings and seal audits covered — the sealed-day reopen
-    * check (Discover.listInputFilesDetecting) compares the day
-    * directory's mtime against this: a file landing at-or-after the
-    * stamp may postdate the last audit and reopens the day. Redrive
-    * commits carry `epoch` here precisely so they never advance a
-    * day's stamp (they observe manifest keys, not the day directory).
+  /** Watermarks, observation stamps AND the committed-batch set from
+    * ONE lineage read — the per-cycle lookup (the reference's 3.8.2
+    * "read sincedb once per cycle" discipline, CHANGELOG.md:8, applies
+    * to all three; the seal audit's census/manifest/published checks
+    * all consume the same cycle-start set).
+    *
+    * Watermarks are the max `last_ts` per day. Observation stamps are
+    * the max `committed_at` per day, in epoch millis. `committed_at` is
+    * stamped at CYCLE START (before any listing), so it lower-bounds
+    * every file the cycle's listings and seal audits covered — the
+    * sealed-day reopen check (Discover.listInputFilesDetecting)
+    * compares the day directory's mtime against this: a file landing
+    * at-or-after the stamp may postdate the last audit and reopens the
+    * day. Redrive commits carry `epoch` here precisely so they never
+    * advance a day's stamp (they observe manifest keys, not the day
+    * directory).
     *
     * MIGRATION NOTE: lineage rows committed by pre-seal-audit builds
     * stamped `committed_at` at cycle END (after the listing), so a file
@@ -96,15 +93,6 @@ object Lineage {
     * checkpoint where that sub-cycle window matters, run one cycle with
     * `PipelineConfig.reauditDays` covering the sealed days — the forced
     * audit manifests anything the old stamps would hide.
-    */
-  def observationsAt(spark: SparkSession, dir: String): Map[String, Long] =
-    stateAt(spark, dir)._2
-
-  /** Watermarks, observation stamps AND the committed-batch set from
-    * ONE lineage read — the per-cycle lookup (the reference's 3.8.2
-    * "read sincedb once per cycle" discipline, CHANGELOG.md:8, applies
-    * to all three; the seal audit's census/manifest/published checks
-    * all consume the same cycle-start set).
     */
   def stateAt(spark: SparkSession, dir: String):
       (Map[String, Timestamp], Map[String, Long], Set[String]) = {
@@ -148,17 +136,11 @@ object Lineage {
     * (snapshot-isolation analog of the reference's mtime-recheck guard,
     * s3.rb:383-390).
     */
-  def committedBatches(spark: SparkSession, sinkRoot: String): Set[String] =
-    committedBatchesAt(spark, path(sinkRoot))
-
   def committedBatchesAt(spark: SparkSession, dir: String): Set[String] =
     readAt(spark, dir).select("batch_id").distinct()
       .collect().map(_.getString(0)).toSet
 
   /** Append commit rows for a published batch. */
-  def commit(spark: SparkSession, sinkRoot: String, rows: Seq[Commit]): Unit =
-    commitAt(spark, path(sinkRoot), rows)
-
   def commitAt(spark: SparkSession, dir: String, rows: Seq[Commit]): Unit = {
     import spark.implicits._
     // coalesce(1) is CORRECT here, not a scale smell: a commit is a
@@ -183,16 +165,13 @@ object Lineage {
     *    failure we abort with the old files fully intact;
     *  - a crash between the move-in and the deletes leaves the compacted
     *    file AND some old files: duplicate commit rows, which every
-    *    lineage read tolerates by construction ([[watermarks]] takes
-    *    max per day, [[committedBatches]] a distinct set — both
+    *    lineage read tolerates by construction ([[stateAt]] takes
+    *    max per day, [[committedBatchesAt]] a distinct set — both
     *    idempotent under row duplication), and the next compaction
     *    removes;
     *  - only files listed BEFORE the rewrite are deleted — commits
     *    appended concurrently are never touched.
     */
-  def compact(spark: SparkSession, sinkRoot: String, maxFiles: Int = 64): Boolean =
-    compactAt(spark, path(sinkRoot), maxFiles)
-
   def compactAt(spark: SparkSession, dir: String, maxFiles: Int = 64): Boolean = {
     import org.apache.hadoop.fs.Path
     val p = new Path(dir)
@@ -242,7 +221,7 @@ object Lineage {
       .map("%02x".format(_)).mkString
   }
 
-  def exists(spark: SparkSession, p: String): Boolean = {
+  private def exists(spark: SparkSession, p: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(p)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(hp) && fs.listStatus(hp).exists(s =>

@@ -42,7 +42,7 @@ object Main {
     // file this cycle's listings/audits cover has mtime >= nothing the
     // stamp postdates, so the sealed-day reopen check (dir mtime >=
     // stamp) can never skip a landing the audits missed. Stamped into
-    // every commit row as `committed_at` (Lineage.observationsAt).
+    // every commit row as `committed_at` (Lineage.stateAt).
     val observedAt = new Timestamp(System.currentTimeMillis())
 
     // 2. discovery: the unprocessed, cutoff-eligible delta plus the
@@ -220,8 +220,8 @@ object Main {
           val dayMax = cached.groupBy(col("day"))
             .agg(max(col("ts")).as("mx")).collect()
           if (dayMax.nonEmpty)
-            Sinks.writeDeferred(cached, cfg.sinkRoot,
-              Lineage.checkpointId(cfg), batchId)
+            BatchStore(Sinks.deferredDir(cfg.sinkRoot,
+              Lineage.checkpointId(cfg))).write(cached, batchId)
           // max ignores null ts; a day whose manifested rows are ALL
           // null-ts yields a null max and is skipped (belt-and-braces:
           // the design guards already exclude null-ts rows everywhere)
@@ -300,10 +300,8 @@ object Main {
     val keys = Seq("conv_id", "turn_idx", "day")
     val published = Sinks.publishedKeys(spark, cfg.sinkRoot, auditDays,
       committed + batchId)
-    val manifestDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark,
-        Sinks.deferredDir(cfg.sinkRoot, Lineage.checkpointId(cfg))),
-      committed)._1
+    val manifestDirs = BatchStore(Sinks.deferredDir(cfg.sinkRoot,
+      Lineage.checkpointId(cfg))).committedDirs(spark, committed)
     val unpub = rows.join(published, keys, "left_anti")
     if (manifestDirs.isEmpty) unpub
     else unpub.join(
@@ -426,8 +424,8 @@ object Main {
       committed: Set[String],
       routed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (!cfg.dedupAcrossCycles) routed
-    else Sinks.readFingerprints(spark, cfg.sinkRoot,
-        Lineage.checkpointId(cfg), committed)
+    else BatchStore(Sinks.fingerprintsDir(cfg.sinkRoot,
+        Lineage.checkpointId(cfg))).read(spark, committed)
       // keepFp: the computed hash column rides along (hidden from every
       // user-facing write — publishBatch drops it before staging) so
       // the fingerprint-store write reuses it instead of re-hashing
@@ -479,15 +477,15 @@ object Main {
       // past its listing threshold, and at most ONE lineage read serves
       // all of them when they do
       lazy val committedNow = Lineage.committedBatchesAt(spark, lineageDir)
+      val cid = Lineage.checkpointId(cfg)
       if (cfg.deferralConfigured) {
-        Sinks.compactDeferred(spark, cfg.sinkRoot, Lineage.checkpointId(cfg),
-          committedNow)
-        Sinks.compactViolations(spark, cfg.sinkRoot,
-          Lineage.checkpointId(cfg), committedNow)
+        Sinks.compactDeferred(spark, cfg.sinkRoot, cid, committedNow)
+        BatchStore(Sinks.violationsDir(cfg.sinkRoot, cid))
+          .compact(spark, committedNow, mergeSchema = true)
       }
       if (cfg.dedupAcrossCycles)
-        Sinks.compactFingerprints(spark, cfg.sinkRoot,
-          Lineage.checkpointId(cfg), committedNow)
+        BatchStore(Sinks.fingerprintsDir(cfg.sinkRoot, cid))
+          .compact(spark, committedNow)
     }
     published
   }
@@ -496,8 +494,8 @@ object Main {
     * ts OR a null identity key (Discover.contractViolation, the ONE
     * shared definition with the design guards) — are structurally
     * unprocessable but must not vanish without a trace when the seal
-    * hides their partition — quarantine them RAW to
-    * `_violations/<cid>/batch=<id>`, the batch analog of the
+    * hides their partition — quarantine them RAW to the
+    * `_violations/<cid>` [[BatchStore]], the batch analog of the
     * streaming path's stream/_violations. (A null-KEY row is exactly
     * as unprocessable as a null-ts one: no equi-join in the
     * audit/redrive machinery can ever match it, so without this
@@ -512,9 +510,9 @@ object Main {
       batchId: String, auditDays: Set[String], committed: Set[String],
       raw: org.apache.spark.sql.DataFrame): Unit = {
     val violAll = raw.filter(Discover.contractViolation)
-    val vDir = Sinks.violationsDir(cfg.sinkRoot, Lineage.checkpointId(cfg))
-    val priorDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark, vDir), committed)._1
+    val census = BatchStore(Sinks.violationsDir(cfg.sinkRoot,
+      Lineage.checkpointId(cfg)))
+    val priorDirs = census.committedDirs(spark, committed)
     val fresh =
       if (priorDirs.isEmpty) violAll
       else {
@@ -548,8 +546,8 @@ object Main {
     val n = cached.count()
     if (n > 0) {
       System.err.println(s"[audit] $n contract-violation rows (null ts " +
-        s"or null identity key) quarantined to $vDir/batch=$batchId")
-      cached.write.mode("overwrite").parquet(s"$vDir/batch=$batchId")
+        s"or null identity key) quarantined to ${census.batchDir(batchId)}")
+      census.write(cached, batchId)
     }
     cached.unpersist()
   }
@@ -621,12 +619,10 @@ object Main {
     // commit) is ignored and the keys re-drive; a committed one
     // excludes them; an orphaned publish (crash before ledger) is
     // invisible to readers and simply re-driven under a fresh batch id.
-    val manifestDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark, Sinks.deferredDir(cfg.sinkRoot, cid)),
-      committed)._1
-    val ledgerDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark, Sinks.redrivenDir(cfg.sinkRoot, cid)),
-      committed)._1
+    val manifestDirs = BatchStore(Sinks.deferredDir(cfg.sinkRoot, cid))
+      .committedDirs(spark, committed)
+    val ledger = BatchStore(Sinks.redrivenDir(cfg.sinkRoot, cid))
+    val ledgerDirs = ledger.committedDirs(spark, committed)
 
     // the batch id hashes the COMMITTED-BATCH SET from lineage (which
     // survives every compaction), not the day watermarks — redrives
@@ -693,7 +689,7 @@ object Main {
       .cache()
     // committed_at = epoch, NOT now: committed_at is the day-dir
     // observation stamp behind the sealed-day reopen check
-    // (Lineage.observationsAt), and a redrive observes only manifest
+    // (Lineage.stateAt), and a redrive observes only manifest
     // keys — advancing a sealed day's stamp here would let a backfill
     // that landed just before this commit slip past the next reopen
     // check unaudited
@@ -706,8 +702,7 @@ object Main {
       // ledger BEFORE commit — see the crash-window analysis above
       // (a redrive manifests nothing, so no watermark absorption)
       () => {
-        redrivenKeys.write.mode("overwrite").parquet(
-          s"${Sinks.redrivenDir(cfg.sinkRoot, cid)}/batch=$batchId")
+        ledger.write(redrivenKeys, batchId)
         Map.empty
       })
     routed.unpersist()

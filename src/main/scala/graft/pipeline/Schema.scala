@@ -115,7 +115,7 @@ case class EnrichedTurn(
   *                        mtime check — covers backfill landings the
   *                        automatic detection cannot see (see
   *                        `sealDaysGraceSeconds`) and pre-upgrade
-  *                        lineage stamps (Lineage.observationsAt
+  *                        lineage stamps (Lineage.stateAt
   *                        migration note). Idempotent and exactly-once
   *                        like every audit; non-sealed days in the
   *                        list are ignored (normal discovery still

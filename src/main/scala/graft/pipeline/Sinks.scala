@@ -15,13 +15,13 @@ import org.apache.spark.sql.functions._
   *   1. write every sink's delta under `_staging/<batchId>/<sink>/`;
   *   2. atomically rename each to `<sink>/batch=<batchId>/` (local/HDFS
   *      rename is atomic per directory);
-  *   3. append the lineage commit rows (Lineage.commit) LAST.
+  *   3. append the lineage commit rows (Lineage.commitAt) LAST.
   *
-  * `batchId` is a pure function of (asOf, checkpoint state), so a crashed
-  * run re-executed on the same state republishes the SAME batch
-  * directories (idempotent), and readers ([[readSink]]) only see batches
-  * recorded in lineage — an orphaned publish from a crash between (2)
-  * and (3) is invisible until its re-run commits.
+  * Every `batch=<id>` namespace here (the sink dirs, `archive`,
+  * `_consumed`, `_deferred`, `_redriven`, `_violations`,
+  * `_fingerprints`) is a [[BatchStore]], which owns the layout, the
+  * committed gate and the fold: an orphaned publish from a crash
+  * between (2) and (3) is invisible until its re-run commits.
   *
   * The physical write is salted-repartitioned on conv_id then
   * secondary-sorted on (conv_id, turn_idx): hot conversations spread
@@ -80,9 +80,8 @@ object Sinks {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("sink="))
       .map { s =>
         val sink = s.getPath.getName.stripPrefix("sink=")
-        val destDir = new Path(s"$root/$sink")
-        fs.mkdirs(destDir)
-        val dest = new Path(destDir, s"batch=$batchId")
+        fs.mkdirs(new Path(s"$root/$sink"))
+        val dest = new Path(BatchStore(s"$root/$sink").batchDir(batchId))
         if (fs.exists(dest)) fs.delete(dest, true)
         fs.rename(s.getPath, dest)
         sink
@@ -101,8 +100,8 @@ object Sinks {
     * `PipelineConfig.archivePrefix = addPrefix` closes the S7c
     * self-exclusion loop: discovery drops the prefixed keys.
     *
-    * Per-batch dir + overwrite = idempotent under re-runs, same
-    * discipline as the staged sink publish. Returns the archive dir.
+    * A [[BatchStore]] namespace (`archive`), idempotent under re-runs
+    * like the staged sink publish. Returns the archive dir.
     *
     * `extraCols` rides configured INPUT metadata columns (the S6
     * storage_class / restore header) into the copy: the reference's
@@ -117,15 +116,12 @@ object Sinks {
       "backup_add_prefix must be non-empty: an empty prefix would make " +
         "archived keys indistinguishable from source keys and defeat " +
         "the self-exclusion guard (Discover S7c)")
-    val dest = s"$root/archive/batch=$batchId"
     val base = Seq(concat(lit(addPrefix), col("conv_id")).as("conv_id"),
       col("turn_idx"), col("role"), col("text"), col("tool"), col("ts"),
       col("day"))
     val extras = extraCols.filter(routed.columns.contains).map(col)
-    routed
-      .select(base ++ extras: _*)
-      .write.mode("overwrite").parquet(dest)
-    dest
+    BatchStore(s"$root/archive").write(routed.select(base ++ extras: _*),
+      batchId)
   }
 
   /** The deferred/redriven namespaces are keyed by CHECKPOINT IDENTITY,
@@ -147,21 +143,17 @@ object Sinks {
     s"$root/_redriven/$checkpointId"
 
   /** Contract-violation census (null event times found by the seal
-    * audit) — operator-facing, never consulted by the engine itself.
-    * Per-batch dirs like every namespace; a reader wanting
-    * exactly-once rows should filter to committed batch ids (readSink
-    * discipline) — an orphan dir from a crashed cycle is overwritten
-    * by the idempotent re-run but is not otherwise cleaned.
+    * audit) — operator-facing; the engine reads it only to dedup the
+    * census itself. A [[BatchStore]] namespace, folded with
+    * mergeSchema.
     */
   def violationsDir(root: String, checkpointId: String): String =
     s"$root/_violations/$checkpointId"
 
   /** Fingerprint store for cross-cycle dedup
-    * (PipelineConfig.dedupAcrossCycles): per-batch dirs of the DISTINCT
-    * normalized-text fingerprints each committed batch delivered to a
-    * content sink. Identity-keyed like every namespace; readers gate on
-    * the committed-batch set, so an orphan dir from a crashed cycle is
-    * invisible and the idempotent re-run overwrites it.
+    * (PipelineConfig.dedupAcrossCycles): a [[BatchStore]] namespace of
+    * the DISTINCT normalized-text fingerprints each committed batch
+    * delivered to a content sink, identity-keyed like every namespace.
     */
   def fingerprintsDir(root: String, checkpointId: String): String =
     s"$root/_fingerprints/$checkpointId"
@@ -177,183 +169,33 @@ object Sinks {
   def writeFingerprints(routed: DataFrame, root: String,
       checkpointId: String, batchId: String,
       contentSinks: Seq[String]): String = {
-    val dest = s"${fingerprintsDir(root, checkpointId)}/batch=$batchId"
     val fp =
       if (routed.columns.contains(graft.ops.Dedup.fpColName))
         col(graft.ops.Dedup.fpColName)
       else graft.ops.TextAnalysis.fingerprint(col("text"))
-    routed.filter(col("sink").isin(contentSinks: _*))
-      .select(fp.as("fp"))
-      .distinct()
-      .write.mode("overwrite").parquet(dest)
-    dest
-  }
-
-  /** The committed seen-set (None when no committed batch has recorded
-    * fingerprints yet — first cycle, or the feature just turned on).
-    */
-  def readFingerprints(spark: SparkSession, root: String,
-      checkpointId: String, committed: Set[String]): Option[DataFrame] = {
-    val dirs = partitionCommitted(
-      batchDirs(spark, fingerprintsDir(root, checkpointId)), committed)._1
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
-
-  /** Fold fingerprint history into one distinct snapshot once the
-    * namespace exceeds `maxDirs` dirs — [[compactDeferred]]'s
-    * discipline (compacted-survivor naming, orphans deleted as crash
-    * debris, only pre-listed dirs touched). Keeps the seen-set read
-    * O(1) dirs and O(distinct fps) rows, not O(cycles).
-    */
-  def compactFingerprints(spark: SparkSession, root: String,
-      checkpointId: String, committedBatches: => Set[String],
-      maxDirs: Int = 64): Boolean =
-    compactNamespace(spark, fingerprintsDir(root, checkpointId),
-      committedBatches, maxDirs, mergeSchema = false)
-
-  /** THE fold-committed-dirs-into-one-snapshot discipline shared by the
-    * violations and fingerprint namespaces (compactDeferred keeps its
-    * own body — its ledger interplay is genuinely different): compacted
-    * snapshot written FIRST (coexistence with the inputs only
-    * duplicates rows, which every reader's distinct/anti-join absorbs),
-    * only pre-listed dirs deleted, orphans deleted as crash debris
-    * (single writer per checkpoint identity; every call site runs
-    * post-commit, so nothing is in-flight). One body so a future fix to
-    * the ordering/orphan rules cannot silently diverge the namespaces.
-    */
-  private[graft] def compactNamespace(spark: SparkSession, nsDir: String,
-      committedBatches: => Set[String], maxDirs: Int,
-      mergeSchema: Boolean): Boolean = {
-    val all = batchDirs(spark, nsDir)
-    if (all.length <= maxDirs) return false
-    val committed = committedBatches
-    val (dirs, orphans) = partitionCommitted(all, committed)
-    if (dirs.nonEmpty)
-      spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(dirs: _*).distinct()
-        .write.mode("overwrite")
-        .parquet(s"$nsDir/batch=compacted-${System.nanoTime()}")
-    val conf = spark.sparkContext.hadoopConfiguration
-    (dirs ++ orphans).foreach { d =>
-      val p = new Path(d)
-      p.getFileSystem(conf).delete(p, true)
-    }
-    true
-  }
-
-  /** Per-batch manifest of skipped-cold rows (S6): the reference loses
-    * an unrestored object forever once sincedb passes its mtime
-    * (s3.rb:152-156); we advance the watermark identically but keep the
-    * skipped rows re-drivable. Idempotent per-batch overwrite; schema =
-    * full input row incl. the storage columns, so a backfill pipeline
-    * can re-evaluate eligibility directly from the manifest.
-    */
-  def writeDeferred(deferred: DataFrame, root: String, checkpointId: String,
-      batchId: String): String = {
-    val dest = s"${deferredDir(root, checkpointId)}/batch=$batchId"
-    deferred.write.mode("overwrite").parquet(dest)
-    dest
+    BatchStore(fingerprintsDir(root, checkpointId)).write(
+      routed.filter(col("sink").isin(contentSinks: _*))
+        .select(fp.as("fp")).distinct(),
+      batchId)
   }
 
   /** List `batch=*` child dirs of a namespace root (empty if absent). */
-  def batchDirs(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
-  }
+  def batchDirs(spark: SparkSession, root: String): Seq[String] =
+    BatchStore(root).list(spark)
 
-  /** THE definition of a recognized (vs orphan) batch dir: its batch id
-    * committed, or it is a compaction survivor. Shared by redrive's
-    * reads and [[compactDeferred]]'s folding/cleanup so the two can
-    * never disagree about which dirs count.
-    */
+  /** [[BatchStore.partitionCommitted]]: (readable, orphan) dirs. */
   def partitionCommitted(dirs: Seq[String],
       committed: Set[String]): (Seq[String], Seq[String]) =
-    dirs.partition { d =>
-      val b = d.split("batch=").last
-      b.startsWith("compacted-") || committed.contains(b)
-    }
+    BatchStore.partitionCommitted(dirs, committed)
 
-  /** Retire resolved deferred/redriven history: when the `_deferred`
-    * namespace exceeds `maxDirs` per-batch dirs, fold every manifest
-    * MINUS the committed-ledger keys into one compacted dir and delete
-    * the folded inputs (manifests AND the ledger dirs they absorbed).
-    * Keeps both namespaces O(pending backlog), not O(cycles) — the
-    * `_lineage` compaction discipline applied here.
-    *
-    * Crash-safe by ordering, tolerant of duplicates like every reader:
-    * compacted dir first (old + new coexisting only duplicates keys,
-    * which redrive's distinct/anti-join absorb), then the listed
-    * manifest dirs, then the folded ledger dirs (a leftover ledger
-    * entry merely anti-joins against nothing). Only dirs LISTED before
-    * the rewrite are deleted — concurrent appends are never touched.
+  /** Retire resolved deferred/redriven history: the `_deferred` fold
+    * minus the `_redriven` ledger ([[BatchStore.compact]]).
     */
   def compactDeferred(spark: SparkSession, root: String, checkpointId: String,
-      committedBatches: => Set[String], maxDirs: Int = 64): Boolean = {
-    val allManifest = batchDirs(spark, deferredDir(root, checkpointId))
-    // cheap listing guard FIRST — the committed set (a lineage read +
-    // driver collect) is by-name and only evaluated past the threshold
-    if (allManifest.length <= maxDirs) return false
-    val committed = committedBatches
-    val (manifestDirs, manifestOrphans) =
-      partitionCommitted(allManifest, committed)
-    val (ledgerDirs, ledgerOrphans) = partitionCommitted(
-      batchDirs(spark, redrivenDir(root, checkpointId)), committed)
-    if (manifestDirs.nonEmpty) {
-      val all = spark.read.parquet(manifestDirs: _*).distinct()
-      val remaining =
-        if (ledgerDirs.isEmpty) all
-        else all.join(spark.read.parquet(ledgerDirs: _*),
-          Seq("conv_id", "turn_idx"), "left_anti")
-      remaining.write.mode("overwrite").parquet(
-        s"${deferredDir(root, checkpointId)}/batch=compacted-${System.nanoTime()}")
-    }
-    // orphans (dirs whose batch never committed) are crash leftovers —
-    // this engine is single-writer PER CHECKPOINT IDENTITY (the same
-    // assumption behind the staged publish's delete+rename), and the
-    // namespace is identity-scoped, so nothing in-flight and no OTHER
-    // pipeline can own them. An orphan manifest describes a stranding
-    // whose commit never happened (its rows are still normally
-    // discoverable); an orphan ledger is ignored by every reader. Both
-    // are deleted here so crash debris cannot accumulate forever.
-    val conf = spark.sparkContext.hadoopConfiguration
-    (manifestDirs ++ ledgerDirs ++ manifestOrphans ++ ledgerOrphans)
-      .foreach { d =>
-        val p = new Path(d)
-        p.getFileSystem(conf).delete(p, true)
-      }
-    true
-  }
-
-  /** Retire violation-census history: when `_violations/<cid>` exceeds
-    * `maxDirs` per-batch dirs, fold every COMMITTED batch's rows into
-    * one compacted snapshot and delete the folded inputs plus orphan
-    * dirs — [[compactDeferred]]'s discipline applied to the census, so
-    * a standing `reauditDays` config with a misbehaving producer
-    * cannot grow the dir count (and the census's prior-batch read
-    * fan-in, Main.quarantineViolations) without bound.
-    *
-    * The fold reads with mergeSchema: census batches store RAW rows
-    * whose schema may evolve across engine versions, and the compacted
-    * snapshot must lose no column of any era (absent columns pad to
-    * null — whole-row distinct treats them null-safely). The frozen
-    * census identity columns exist in every batch ever written, so the
-    * census's fixed-schema dedup read works on the compacted dir
-    * unchanged. Crash-safety and orphan reasoning are compactDeferred's
-    * verbatim: compacted dir written first (coexistence only duplicates
-    * rows, which the census's whole-row anti-join absorbs), only
-    * pre-listed dirs deleted, orphans are crash debris whose rows were
-    * re-quarantined under the successor batch id (single writer per
-    * checkpoint identity; this runs post-commit, so nothing is
-    * in-flight).
-    */
-  def compactViolations(spark: SparkSession, root: String,
-      checkpointId: String, committedBatches: => Set[String],
-      maxDirs: Int = 64): Boolean =
-    compactNamespace(spark, violationsDir(root, checkpointId),
-      committedBatches, maxDirs, mergeSchema = true)
+      committedBatches: => Set[String], maxDirs: Int = 64): Boolean =
+    BatchStore(deferredDir(root, checkpointId)).compact(spark,
+      committedBatches, maxDirs,
+      ledger = Some(BatchStore(redrivenDir(root, checkpointId))))
 
   /** S16 `delete` analog (s3.rb:181-183): after a successful commit, the
     * batch's consumed (conv_id, day) set is recorded in a per-batch
@@ -362,12 +204,9 @@ object Sinks {
     * (exactly how the reference separates "processed" from the
     * irreversible delete behind its `delete` flag).
     */
-  def markConsumed(routed: DataFrame, root: String, batchId: String): String = {
-    val dest = s"$root/_consumed/batch=$batchId"
-    routed.select(col("conv_id"), col("day")).distinct()
-      .write.mode("overwrite").parquet(dest)
-    dest
-  }
+  def markConsumed(routed: DataFrame, root: String, batchId: String): String =
+    BatchStore(s"$root/_consumed").write(
+      routed.select(col("conv_id"), col("day")).distinct(), batchId)
 
   /** (conv_id, turn_idx, day) keys published across ALL sinks for the
     * given days — the seal audit's "already delivered" side.
@@ -402,8 +241,8 @@ object Sinks {
           p.getName.startsWith(".") ||
           p.getName == "archive" || // prefixed COPIES, not deliveries
           p.getName == "stream") // the streaming surface commits its own
-    val batches = sinkDirs.flatMap(sd => batchDirs(spark, sd.toString))
-      .filter(d => committed.contains(d.split("batch=").last))
+    val batches = sinkDirs.flatMap(sd =>
+      BatchStore(sd.toString).committedDirs(spark, committed))
     if (batches.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keySchema)
@@ -413,29 +252,12 @@ object Sinks {
   }
 
   /** Read a sink's COMMITTED contents: only batch dirs present in the
-    * lineage table (snapshot isolation for readers).
+    * default-location lineage table (snapshot isolation for readers).
     */
   def readSink(spark: SparkSession, root: String, sink: String): DataFrame =
-    readSink(spark, root, sink, Lineage.path(root))
-
-  /** As [[readSink]], with the lineage table at an explicit location
-    * (configurable `lineagePath` pipelines, Lineage.dirFor).
-    */
-  def readSink(spark: SparkSession, root: String, sink: String,
-      lineageDir: String): DataFrame = {
-    val committed = Lineage.committedBatchesAt(spark, lineageDir)
-    val dir = new Path(s"$root/$sink")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches =
-      if (!fs.exists(dir)) Seq.empty[String]
-      else fs.listStatus(dir).toSeq
-        .map(_.getPath)
-        .filter(p => p.getName.startsWith("batch=") &&
-          committed.contains(p.getName.stripPrefix("batch=")))
-        .map(_.toString)
-    if (batches.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schema.turnSchema)
-    } else spark.read.parquet(batches: _*)
-  }
+    BatchStore(s"$root/$sink")
+      .read(spark, Lineage.committedBatchesAt(spark, Lineage.path(root)))
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        Schema.turnSchema))
 }

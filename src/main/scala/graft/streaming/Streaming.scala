@@ -74,14 +74,14 @@ object Streaming {
     * Ordering VALIDITY IS CHECKED, not assumed: the carry records each
     * conversation's max committed turn_idx, and a batch delivering
     * turn_idx <= that max (an out-of-order backfill — e.g. an old file
-    * landing late) has those rows QUARANTINED to
-    * `stream/_violations/batch=N` before the pipeline runs, never
+    * landing late) has those rows QUARANTINED to the
+    * `stream/_violations` BatchStore before the pipeline runs, never
     * silently stamped with a header/session context that postdates them.
     * The reference gets the same guarantee from its serial oldest-first
     * listing (s3.rb:166); a parallel engine has to enforce it.
     */
   /** The full-snapshot store behind [[Carry]]: per-batch FULL
-    * snapshots under `<dir>/batch=<id>`; reads take the latest
+    * snapshots in a BatchStore; reads take the latest
     * snapshot STRICTLY BEFORE a batch id (a retried batch never
     * consults its own crashed partial write — only the committed
     * predecessor); writes overwrite idempotently and retain this
@@ -96,35 +96,32 @@ object Streaming {
     import org.apache.spark.sql.types.StructType
 
     def read(spark: SparkSession, dir: String, schema: StructType,
-        beforeBatch: Long): DataFrame = {
-      val d = new org.apache.hadoop.fs.Path(dir)
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prev =
-        if (!fs.exists(d)) None
-        else fs.listStatus(d).toSeq
-          .map(_.getPath.getName)
-          .filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong)
-          .filter(_ < beforeBatch)
-          .sorted.lastOption
-      prev match {
-        case Some(b) => spark.read.schema(schema).parquet(s"$dir/batch=$b")
+        beforeBatch: Long): DataFrame =
+      before(spark, dir, beforeBatch).lastOption match {
+        case Some(d) => spark.read.schema(schema).parquet(d)
         case None => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       }
-    }
 
     def write(state: DataFrame, dir: String, batchId: Long): Unit = {
-      state.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-      val d = new org.apache.hadoop.fs.Path(dir)
-      val fs = d.getFileSystem(
-        state.sparkSession.sparkContext.hadoopConfiguration)
-      fs.listStatus(d).toSeq
-        .map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-        .filter(_.getName.stripPrefix("batch=").toLong < batchId - 2)
-        .foreach(p => fs.delete(p, true))
+      BatchStore(dir).write(state, batchId.toString)
+      BatchStore.delete(state.sparkSession,
+        before(state.sparkSession, dir, batchId - 2))
     }
+  }
+
+  /** The streaming gate (the streaming BatchStores have no lineage):
+    * the `compacted-` survivors, then the dirs of micro-batches
+    * STRICTLY BEFORE `batchId` in id order. A retried batch never sees
+    * its own crashed partial write; a survivor only ever folds
+    * strictly-prior batches (see [[StreamFingerprints]]).
+    */
+  private[streaming] def before(spark: SparkSession, dir: String,
+      batchId: Long): Seq[String] = {
+    val (comp, delta) =
+      BatchStore(dir).list(spark).partition(BatchStore.isCompacted)
+    comp ++ delta.map(d => (BatchStore.idOf(d).toLong, d))
+      .filter(_._1 < batchId).sortBy(_._1).map(_._2)
   }
 
   object Carry {
@@ -158,16 +155,16 @@ object Streaming {
 
   /** Streaming fingerprint store for cross-batch dedup — per-batch
     * DELTA dirs + threshold compaction, the batch pipeline's
-    * `_fingerprints/<cid>` design (Sinks.writeFingerprints /
-    * compactFingerprints) applied to the stream. Each micro-batch
+    * `_fingerprints/<cid>` BatchStore design applied to the stream,
+    * under the streaming gate ([[before]]). Each micro-batch
     * writes ONLY its own newly-seen content fingerprints (O(batch)
     * rows — reRouteSeen guarantees a fp already in the seen-set never
     * reaches a content sink, so deltas are disjoint by construction),
     * NOT a full seen-set snapshot: a long-running stream's per-batch
     * write cost stays bounded by the batch, not by the accumulated
-    * corpus. Read fan-in is bounded by [[compact]]: past `maxDirs`
-    * delta dirs, strictly-prior deltas fold into one distinct
-    * `compacted-` dir.
+    * corpus. Read fan-in is bounded by the shared BatchStore.fold in
+    * [[runForeachBatch]]: past `fpCompactDirs` dirs, strictly-prior
+    * deltas fold into one distinct `compacted-` dir.
     *
     * Replay safety (the Carry strictly-before rule, per-dir): a read
     * for batch B unions only delta dirs with id < B, so a retried
@@ -181,27 +178,11 @@ object Streaming {
     * side's distinct (reRouteSeen) absorbs.
     */
   object StreamFingerprints {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types._
 
     val schema: StructType = StructType(Seq(StructField("fp", StringType)))
 
     def dir(sinkRoot: String): String = s"$sinkRoot/stream/_fingerprints"
-
-    /** (delta dirs as (id, path), compacted dirs as paths). */
-    private def listDirs(spark: SparkSession,
-        root: String): (Seq[(Long, String)], Seq[String]) = {
-      val d = new Path(root)
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(d)) return (Seq.empty, Seq.empty)
-      val names = fs.listStatus(d).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-      val (comp, delta) =
-        names.partition(_.getName.startsWith("batch=compacted-"))
-      (delta.map(p =>
-          (p.getName.stripPrefix("batch=").toLong, p.toString)),
-        comp.map(_.toString))
-    }
 
     /** The seen-set visible to batch `beforeBatch`: all compacted dirs
       * plus deltas strictly before it. May contain duplicate fps after
@@ -210,41 +191,18 @@ object Streaming {
       */
     def read(spark: SparkSession, sinkRoot: String,
         beforeBatch: Long): DataFrame = {
-      val (delta, comp) = listDirs(spark, dir(sinkRoot))
-      val dirs = comp ++ delta.filter(_._1 < beforeBatch).map(_._2)
+      val dirs = before(spark, dir(sinkRoot), beforeBatch)
       if (dirs.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else spark.read.schema(schema).parquet(dirs: _*)
     }
 
     /** Write THIS batch's new fps (already content-sink-filtered and
-      * distinct'd by the caller) as `batch=<id>` — idempotent per-batch
-      * overwrite, O(batch) rows.
+      * distinct'd by the caller) — idempotent per-batch overwrite,
+      * O(batch) rows.
       */
     def write(newFps: DataFrame, sinkRoot: String, batchId: Long): Unit =
-      newFps.write.mode("overwrite").parquet(s"${dir(sinkRoot)}/batch=$batchId")
-
-    /** Fold strictly-prior history into one distinct snapshot once the
-      * namespace exceeds `maxDirs` dirs — compacted dir written FIRST,
-      * only pre-listed dirs deleted (the Sinks.compactNamespace
-      * discipline). The CURRENT batch's own delta is never folded: it
-      * is the one dir a retry of `batchId` must not see.
-      */
-    def compact(spark: SparkSession, sinkRoot: String, batchId: Long,
-        maxDirs: Int = 64): Boolean = {
-      val (delta, comp) = listDirs(spark, dir(sinkRoot))
-      val foldable = comp ++ delta.filter(_._1 < batchId).map(_._2)
-      if (foldable.length <= maxDirs) return false
-      spark.read.schema(schema).parquet(foldable: _*).distinct()
-        .write.mode("overwrite")
-        .parquet(s"${dir(sinkRoot)}/batch=compacted-${System.nanoTime()}")
-      val conf = spark.sparkContext.hadoopConfiguration
-      foldable.foreach { f =>
-        val p = new Path(f)
-        p.getFileSystem(conf).delete(p, true)
-      }
-      true
-    }
+      BatchStore(dir(sinkRoot)).write(newFps, batchId.toString)
   }
 
   /** Production shape: micro-batch = one reference polling cycle.
@@ -300,10 +258,11 @@ object Streaming {
         val lateRaw = flagged.filter(isLate).drop("carry_max_idx")
         val nLate = lateRaw.count()
         if (nLate > 0) {
-          System.err.println(s"[stream] batch=$batchId: $nLate out-of-order " +
-            s"backfill rows quarantined to stream/_violations/batch=$batchId")
-          lateRaw.write.mode("overwrite")
-            .parquet(s"$sinkRoot/stream/_violations/batch=$batchId")
+          val quarantine = BatchStore(s"$sinkRoot/stream/_violations")
+          System.err.println(s"[stream] micro-batch $batchId: $nLate " +
+            "out-of-order backfill rows quarantined to " +
+            quarantine.batchDir(batchId.toString))
+          quarantine.write(lateRaw, batchId.toString)
         }
         val turns = flagged.filter(!isLate).drop("carry_max_idx").as[Turn]
         val routed = Pipeline(turns, excludePattern, codec = codec)
@@ -396,19 +355,26 @@ object Streaming {
           .repartition(col("conv_id"))
           .sortWithinPartitions(col("sink"), col("conv_id"), col("turn_idx"))
           .write.mode("overwrite").partitionBy("sink")
-          .parquet(s"$sinkRoot/stream/batch=$batchId")
+          .parquet(BatchStore(s"$sinkRoot/stream").batchDir(batchId.toString))
         // fp delta-out: ONLY this batch's newly-seen content fps —
         // duplicate-sink rows are in an earlier delta by construction
         // (that is why they re-routed), so the write is O(batch) rows
         // no matter how large the accumulated corpus is. Threshold
-        // compaction then bounds the read fan-in at O(maxDirs) dirs.
+        // compaction then bounds the read fan-in at O(maxDirs) dirs:
+        // the strictly-prior dirs fold, never this batch's own delta
+        // (the one dir a retry of this batch must not see).
         if (dedupAcrossBatches) {
           val newFps = published
             .filter(col("sink").isin(Route.contentSinks: _*))
             .select(col(graft.ops.Dedup.fpColName).as("fp"))
             .distinct()
           StreamFingerprints.write(newFps, sinkRoot, batchId)
-          StreamFingerprints.compact(sess, sinkRoot, batchId, fpCompactDirs)
+          val fpDir = StreamFingerprints.dir(sinkRoot)
+          val prior = before(sess, fpDir, batchId)
+          if (prior.length > fpCompactDirs)
+            BatchStore(fpDir).fold(sess, prior, Nil)(ds =>
+              sess.read.schema(StreamFingerprints.schema).parquet(ds: _*)
+                .distinct())
         }
         // carry-out: the conv's state AT ITS LAST ROW of this batch
         // (header/session are running values, so max_by(., turn_idx) is

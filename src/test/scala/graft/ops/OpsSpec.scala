@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.SparkTestSession
+import graft.pipeline.{BatchStore, SparkTestSession}
 
 /** Unit coverage for the training-data operators whose full semantics
   * the DuckDB oracle can't express (dedup survivors, LSH recall,
@@ -16,8 +16,7 @@ class OpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("concatenated gzip members read as one stream (multi-stream fixture analog)") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "gz").toString
+    val dir = graft.TestDirs.temp("gz").toString
     val f = new java.io.File(s"$dir/multi.log.gz")
     val out = new java.io.FileOutputStream(f)
     // two independently-gzipped members, 8 lines each, back to back
@@ -37,8 +36,7 @@ class OpsSpec extends AnyFunSuite {
   test("custom gzip_pattern dispatch: a '.gee.zip' gzip file decodes, " +
       "broken gzip is skipped, plain files pass through (s3.rb:89,326; spec:466-467)") {
     import graft.sources.GzipPatternSource
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "geezip").toString
+    val dir = graft.TestDirs.temp("geezip").toString
     // gzip content under a name Hadoop's extension dispatch can't see,
     // with TWO concatenated members (the multi-stream fixture analog)
     val f = new java.io.File(s"$dir/uncompressed.log.gee.zip")
@@ -112,8 +110,7 @@ class OpsSpec extends AnyFunSuite {
   test("gzip bomb guard: an object exceeding the decompressed-bytes cap " +
       "is skipped like a broken file, others still read") {
     import graft.sources.GzipPatternSource
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "gzbomb").toString
+    val dir = graft.TestDirs.temp("gzbomb").toString
     // ~1 MB of zeros compresses to ~1 KB — over a 64 KB cap it must be
     // skipped; OOM is not an acceptable failure mode for one bad object
     val bomb = new java.util.zip.GZIPOutputStream(
@@ -144,8 +141,7 @@ class OpsSpec extends AnyFunSuite {
       "spec:325-339): one event per line, source key in metadata, gzip transparent") {
     import graft.sources.GzipPatternSource
     import graft.pipeline.Pipeline
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "rawlogs").toString
+    val dir = graft.TestDirs.temp("rawlogs").toString
     // uncompressed.log analog: 2 grok lines -> 2 events
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/uncompressed.log"),
@@ -177,8 +173,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("invalid UTF-8 bytes sanitize to U+FFFD on read and survive the parse (invalid_utf8.gbk fixture analog)") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "gbk").toString
+    val dir = graft.TestDirs.temp("gbk").toString
     val f = new java.io.File(s"$dir/invalid.log")
     // two lines; the first embeds GBK bytes that are invalid UTF-8
     val out = new java.io.FileOutputStream(f)
@@ -434,8 +429,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("writeClusters fails CLOSED on non-convergence unless the " +
       "operator opts into persisting the over-segmentation") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "wclust").toString
+    val root = graft.TestDirs.temp("wclust").toString
     val chain = (0 until 200).map(i => (f"c$i%03d", f"c${i + 1}%03d"))
       .toDF("id_a", "id_b")
     val ex = intercept[IllegalStateException] {
@@ -534,8 +528,7 @@ class OpsSpec extends AnyFunSuite {
 
     // persisted band state: write old bands as a committed batch plus an
     // orphan; the read-back union drives the same incremental result
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bands").toString
+    val root = graft.TestDirs.temp("bands").toString
     Dedup.writeBands(stored, root, "c1", "b1", "doc_id")
     Dedup.writeBands(incoming.limit(3), root, "c1", "orphan", "doc_id")
     assert(Dedup.readBands(spark, root, "c1", Set.empty).isEmpty)
@@ -644,8 +637,7 @@ class OpsSpec extends AnyFunSuite {
   test("pair materialization: persisted pairs feed cluster resolution " +
       "and curated builds identically to direct derivation; uncommitted " +
       "dirs are invisible") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pairs").toString
+    val root = graft.TestDirs.temp("pairs").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 3, 8)
     val pairs = Dedup.lshCandidatePairs(
@@ -975,8 +967,7 @@ class OpsSpec extends AnyFunSuite {
       "in-memory table it encodes (expression AND BpeNative), comments " +
       "and blank lines skipped, malformed lines THROW") {
     import graft.functions.{BpeExprs, BpeNative, BpeVocab}
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bpevocab")
+    val dir = graft.TestDirs.temp("bpevocab")
     // encode the DEMO table as a merges file, rank = line order, with
     // the noise a hand-maintained file accumulates: comments, blank
     // lines, stray surrounding whitespace
@@ -1035,8 +1026,7 @@ class OpsSpec extends AnyFunSuite {
       "addFile resolves by basename when the path is not a local file " +
       "(the --files executor path)") {
     import graft.functions.{BpeExprs, BpeVocab}
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bpeship")
+    val dir = graft.TestDirs.temp("bpeship")
     // unique basename per run: SparkFiles resolves by basename and the
     // ranks cache is keyed by name — both must see a fresh identity
     val base = s"shipped_merges_${System.nanoTime()}.txt"
@@ -1817,8 +1807,7 @@ class OpsSpec extends AnyFunSuite {
   test("compactPairs/compactBands fold committed dirs past the " +
       "threshold: one compacted survivor, identical read set, orphans " +
       "deleted, crash-window duplicates tolerated") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dedupcompact").toString
+    val root = graft.TestDirs.temp("dedupcompact").toString
     val committed = (0 until 5).map(i => s"b$i").toSet
     for (i <- 0 until 5)
       Dedup.writePairs(Seq((s"d$i", s"d${i + 10}")).toDF("id_a", "id_b"),
@@ -1830,9 +1819,10 @@ class OpsSpec extends AnyFunSuite {
     val before = pairSet()
     assert(before.size == 5 && !before.contains(("zz", "zy")),
       "orphan rows are invisible to the committed reader")
-    assert(!Dedup.compactPairs(spark, root, "c1", committed, maxDirs = 64),
+    val pairStore = BatchStore(Dedup.pairsDir(root, "c1"))
+    assert(!pairStore.compact(spark, committed, maxDirs = 64),
       "below the threshold: no-op")
-    assert(Dedup.compactPairs(spark, root, "c1", committed, maxDirs = 2))
+    assert(pairStore.compact(spark, committed, maxDirs = 2))
     val dirs = new java.io.File(s"$root/_pairs/c1").listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).toSeq
     assert(dirs.length == 1 && dirs.head.startsWith("batch=compacted-"),
@@ -1849,7 +1839,8 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
       .toSet
     val bandsBefore = bandSet()
-    assert(Dedup.compactBands(spark, root, "c1", bandCommitted, maxDirs = 1))
+    assert(BatchStore(Dedup.bandsDir(root, "c1"))
+      .compact(spark, bandCommitted, maxDirs = 1))
     assert(bandSet() == bandsBefore)
     // crash window: a second compacted dir coexisting (interrupted run)
     // only duplicates rows — readPairs' distinct absorbs it
@@ -1863,8 +1854,7 @@ class OpsSpec extends AnyFunSuite {
   test("compactClusters retains only the current label GENERATION " +
       "(label tables supersede — a row fold would fabricate " +
       "multi-label ids)") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "clustercompact").toString
+    val root = graft.TestDirs.temp("clustercompact").toString
     for (g <- 0 until 3)
       Seq(("a", "a", true), ("b", "a", false))
         .toDF("id", "cluster_id", "keep")

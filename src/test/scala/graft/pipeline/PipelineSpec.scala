@@ -22,14 +22,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   import spark.implicits._
 
   private val scratch =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pipespec").toString
+    graft.TestDirs.temp("pipespec").toString
 
   val seed = 42L
   val nConvs = 60L
 
   // asOf far past every generated ts so the cutoff keeps everything.
   val farFuture = new Timestamp(Synth.baseEpochMs + 365L * 86400000L)
+
+  /** Watermarks of the default-location lineage. */
+  private def watermarks(root: String) =
+    Lineage.stateAt(spark, Lineage.path(root))._1
 
   override def afterAll(): Unit = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
@@ -449,7 +452,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // crash simulation: publish happened but lineage commit didn't.
     // Readers must not see the orphan; the re-run must be idempotent.
-    val wms = Lineage.watermarks(spark, sinkRoot)
+    val wms = watermarks(sinkRoot)
     // `more` rows land ~900-960 days after base; asOf3 must be beyond them
     val asOf3 = new Timestamp(Synth.baseEpochMs + 2000L * 86400000L)
     val more = Synth.turns(spark, seed + 2, 5L)
@@ -558,9 +561,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("empty/missing lineage reads as epoch watermark (sincedb_spec analog)") {
-    assert(Lineage.watermarks(spark, s"$scratch/nonexistent").isEmpty)
-    val df = Lineage.read(spark, s"$scratch/nonexistent")
-    assert(df.isEmpty)
+    assert(watermarks(s"$scratch/nonexistent").isEmpty)
+    val batches =
+      Lineage.committedBatchesAt(spark, Lineage.path(s"$scratch/nonexistent"))
+    assert(batches.isEmpty)
   }
 
   test("error resilience: a missing/empty input table yields 0 events, no " +
@@ -618,21 +622,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = s"$scratch/compact_sinks"
     val now = new Timestamp(0L)
     (1 to 80).foreach { i =>
-      Lineage.commit(spark, root, Seq(
+      Lineage.commitAt(spark, Lineage.path(root), Seq(
         Lineage.Commit(s"b$i", f"2025-01-${i % 28 + 1}%02d",
           new Timestamp(i * 1000L), i.toLong, now)))
     }
-    val before = Lineage.read(spark, root).collect()
+    val before = spark.read.parquet(Lineage.path(root)).collect()
       .map(_.toString).sorted
-    val wmBefore = Lineage.watermarks(spark, root)
-    assert(Lineage.compact(spark, root, maxFiles = 16), "compaction triggered")
+    val wmBefore = watermarks(root)
+    assert(Lineage.compactAt(spark, Lineage.path(root), maxFiles = 16),
+      "compaction triggered")
     val p = new org.apache.hadoop.fs.Path(Lineage.path(root))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) == 1)
-    val after = Lineage.read(spark, root).collect().map(_.toString).sorted
+    val after = spark.read.parquet(Lineage.path(root)).collect()
+      .map(_.toString).sorted
     assert(after.toSeq == before.toSeq, "history identical after compaction")
-    assert(Lineage.watermarks(spark, root) == wmBefore)
-    assert(!Lineage.compact(spark, root, maxFiles = 16), "idempotent no-op below threshold")
+    assert(watermarks(root) == wmBefore)
+    assert(!Lineage.compactAt(spark, Lineage.path(root), maxFiles = 16),
+      "idempotent no-op below threshold")
 
     // crash-window simulation: a compaction that died between the
     // compacted-file move-in and the old-file deletes leaves DUPLICATE
@@ -644,14 +651,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.hadoop.fs.FileUtil.copy(fs, one, fs,
       new org.apache.hadoop.fs.Path(p, "dup-leftover.parquet"),
       false, spark.sparkContext.hadoopConfiguration)
-    assert(Lineage.watermarks(spark, root) == wmBefore,
+    assert(watermarks(root) == wmBefore,
       "watermarks unchanged under duplicated history")
-    assert(Lineage.committedBatches(spark, root) ==
+    assert(Lineage.committedBatchesAt(spark, Lineage.path(root)) ==
       before.indices.map(i => s"b${i + 1}").toSet,
       "batch set unchanged under duplicated history")
-    assert(Lineage.compact(spark, root, maxFiles = 1), "re-compaction converges")
+    assert(Lineage.compactAt(spark, Lineage.path(root), maxFiles = 1),
+      "re-compaction converges")
     assert(fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) == 1)
-    assert(Lineage.watermarks(spark, root) == wmBefore)
+    assert(watermarks(root) == wmBefore)
   }
 
   test("approx distinct-convs per sink tracks exact within 15% (3x default rsd)") {
@@ -830,10 +838,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val rA = Main.runCycle(spark, cfgA, farFuture)
     assert(rA.rowsProcessed == nA)
-    assert(Lineage.watermarksAt(spark, Lineage.dirFor(cfgA)).nonEmpty)
-    assert(Lineage.watermarksAt(spark, Lineage.dirFor(cfgB)).isEmpty,
+    assert(Lineage.stateAt(spark, Lineage.dirFor(cfgA))._1.nonEmpty)
+    assert(Lineage.stateAt(spark, Lineage.dirFor(cfgB))._1.isEmpty,
       "pipeline B's watermark must not move when A commits")
-    assert(Lineage.watermarks(spark, sinkRoot).isEmpty,
+    assert(watermarks(sinkRoot).isEmpty,
       "default-location lineage untouched when lineagePath is set")
 
     // B processes its own input in full despite sharing the sinkRoot
@@ -848,10 +856,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // committed readers scoped by lineage location see exactly their
     // pipeline's rows
-    val visA = Route.sinkNames.map(s =>
-      Sinks.readSink(spark, sinkRoot, s, Lineage.dirFor(cfgA)).count()).sum
-    val visB = Route.sinkNames.map(s =>
-      Sinks.readSink(spark, sinkRoot, s, Lineage.dirFor(cfgB)).count()).sum
+    def visible(cfg: PipelineConfig) = Route.sinkNames.flatMap(s =>
+      BatchStore(s"$sinkRoot/$s")
+        .read(spark, Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg)))
+        .map(_.count())).sum
+    val visA = visible(cfgA)
+    val visB = visible(cfgB)
     assert(visA == nA && visB == nB)
   }
 
@@ -1012,7 +1022,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cfg = PipelineConfig(inputPath, s"$scratch/seal_sinks")
     val r1 = Main.runCycle(spark, cfg, asOf)
     assert(r1.rowsProcessed == rows.size)
-    val wms1 = Lineage.watermarks(spark, cfg.sinkRoot)
+    val wms1 = watermarks(cfg.sinkRoot)
     assert(Discover.completedDays(wms1).isEmpty,
       "max(ts) watermarks never complete a day by themselves")
 
@@ -1021,7 +1031,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sealCfg = cfg.copy(sealDaysGraceSeconds = 3600)
     val r2 = Main.runCycle(spark, sealCfg, asOf)
     assert(r2.rowsProcessed == 0L)
-    val wms2 = Lineage.watermarks(spark, cfg.sinkRoot)
+    val wms2 = watermarks(cfg.sinkRoot)
     assert(Discover.completedDays(wms2) ==
       Set("2025-04-01", "2025-04-02"), s"both days sealed, got $wms2")
     assert(Discover.listInputFiles(spark, inputPath,
@@ -1032,9 +1042,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a day still inside its grace window is NOT sealed
     val inGrace = cfg.copy(sealDaysGraceSeconds = 30 * 86400)
-    val wmsBefore = Lineage.watermarks(spark, cfg.sinkRoot)
+    val wmsBefore = watermarks(cfg.sinkRoot)
     assert(Main.runCycle(spark, inGrace, asOf).rowsProcessed == 0L)
-    assert(Lineage.watermarks(spark, cfg.sinkRoot) == wmsBefore,
+    assert(watermarks(cfg.sinkRoot) == wmsBefore,
       "grace not elapsed -> no new seal commits")
   }
 
@@ -1062,14 +1072,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Main.runCycle(spark, cfg1, at("2025-05-02T00:30:00Z"))
     assert(r1.rowsProcessed == 1L, "only the 10:00 row is cutoff-eligible")
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg1.sinkRoot)).isEmpty,
+      watermarks(cfg1.sinkRoot)).isEmpty,
       "grace clamps to cutoff: day must NOT seal inside the cutoff window")
     // cycle 2 at 02:00: past end-of-day + cutoff -> the deferred row is
     // processed AND the day seals in the same commit
     val r2 = Main.runCycle(spark, cfg1, at("2025-05-02T02:00:00Z"))
     assert(r2.rowsProcessed == 1L, "the cutoff-deferred row is NOT lost")
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg1.sinkRoot)) == Set("2025-05-01"))
+      watermarks(cfg1.sinkRoot)) == Set("2025-05-01"))
 
     // leg 2 (R1): a sealing-only cycle (no eligible data) must write the
     // deferred-cold manifest BEFORE the seal hides the partition forever
@@ -1091,7 +1101,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       at("2025-06-02T13:00:00Z"))
     assert(rB.rowsProcessed == 0L)
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, base2.sinkRoot)) == Set("2025-06-01"))
+      watermarks(base2.sinkRoot)) == Set("2025-06-01"))
     val manifestB = spark.read
       .parquet(s"${Sinks.deferredDir(base2.sinkRoot, Lineage.checkpointId(base2))}/batch=${rB.batchId}")
     assert(manifestB.select($"conv_id").collect().map(_.getString(0)).toSeq
@@ -1119,7 +1129,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Main.runCycle(spark, cfg, at("2025-07-03T00:00:00Z"))
     assert(r1.rowsProcessed == 1L)
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)) == Set("2025-07-01"))
+      watermarks(cfg.sinkRoot)) == Set("2025-07-01"))
 
     // re-drive BEFORE the restore completes: nothing is eligible yet
     val r2 = Main.redriveDeferred(spark, cfg, at("2025-07-04T00:00:00Z"))
@@ -1152,7 +1162,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"exactly one copy of each row, got ${visible.mkString(",")}")
     // watermark/seal state untouched by the re-drive
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)) == Set("2025-07-01"))
+      watermarks(cfg.sinkRoot)) == Set("2025-07-01"))
 
     // idempotence: the ledger makes a second re-drive a no-op, and a
     // normal cycle still discovers nothing (sealed day stays sealed)
@@ -1183,7 +1193,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Main.runCycle(spark, cfg, at("2025-09-03T00:00:00Z"))
     assert(r1.rowsProcessed == 2L)
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)) == Set("2025-09-01"))
+      watermarks(cfg.sinkRoot)) == Set("2025-09-01"))
 
     // a warm backfill file lands in the SEALED partition with in-range ts
     Seq(row("late", "2025-09-01T10:30:00Z"))
@@ -1248,7 +1258,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Main.runCycle(spark, cfg, at("2025-11-03T00:00:00Z"))
     assert(r1.rowsProcessed == 2L, "nested day partitions are discovered")
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)) == Set("2025-11-01"))
+      watermarks(cfg.sinkRoot)) == Set("2025-11-01"))
 
     Seq(row("late", "2025-11-01T10:30:00Z"))
       .toDF(cols: _*).write.mode("append").partitionBy("day")
@@ -1326,7 +1336,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Main.runCycle(spark, cfg, at("2026-01-03T00:00:00Z"))
     assert(r1.rowsProcessed == 1L)
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)) == Set("2026-01-01"))
+      watermarks(cfg.sinkRoot)) == Set("2026-01-01"))
 
     // a producer violates day == date(ts): the row lands in the sealed
     // 2026-01-01 partition with a ts past that day's end
@@ -1341,7 +1351,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the audit has no ts cap — a ts beyond end-of-day must not hide the row")
     // the refresh commit absorbed the mismatch ts into the watermark,
     // so the manifested row is behind it (redrive's release condition)
-    assert(Lineage.watermarks(spark, cfg.sinkRoot)("2026-01-01") ==
+    assert(watermarks(cfg.sinkRoot)("2026-01-01") ==
       at("2026-01-02T00:00:05Z"))
     assert(Main.redriveDeferred(spark, cfg,
       at("2026-01-04T00:00:00Z")).rowsProcessed == 1L)
@@ -1374,14 +1384,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Main.runCycle(spark, cfg, at("2026-02-02T02:00:00Z"))
     assert(r1.rowsProcessed == 1L, "only w1 is cutoff-eligible")
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)) == Set("2026-02-01"))
+      watermarks(cfg.sinkRoot)) == Set("2026-02-01"))
     val m1 = spark.read.parquet(
       s"${Sinks.deferredDir(cfg.sinkRoot, cid)}/batch=${r1.batchId}")
     assert(m1.select($"conv_id").collect().map(_.getString(0)).toSeq ==
       Seq("mis"),
       "the sealing cycle must manifest the cutoff-deferred mismatch row " +
         "even with no prior watermark; null-ts rows are contract-excluded")
-    assert(Lineage.watermarks(spark, cfg.sinkRoot)("2026-02-01") ==
+    assert(watermarks(cfg.sinkRoot)("2026-02-01") ==
       at("2026-02-02T01:30:00Z"), "commit absorbed the manifested ts")
 
     assert(Main.redriveDeferred(spark, cfg,
@@ -1482,7 +1492,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Main.runCycle(spark, cfg, at("2025-10-01T12:00:00Z"))
     assert(r1.rowsProcessed == 2L)
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)).isEmpty)
+      watermarks(cfg.sinkRoot)).isEmpty)
 
     // a backfill lands BEHIND the committed watermark (10:30 < 11:00):
     // invisible to normal discovery from now on, like the reference's
@@ -1495,7 +1505,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r2 = Main.runCycle(spark, cfg, at("2025-10-02T02:00:00Z"))
     assert(r2.rowsProcessed == 0L)
     assert(Discover.completedDays(
-      Lineage.watermarks(spark, cfg.sinkRoot)) == Set("2025-10-01"))
+      watermarks(cfg.sinkRoot)) == Set("2025-10-01"))
     val m2 = spark.read.parquet(
       s"${Sinks.deferredDir(cfg.sinkRoot, cid)}/batch=${r2.batchId}")
     assert(m2.select($"conv_id").collect().map(_.getString(0)).toSeq ==
@@ -1729,8 +1739,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val r1 = Main.runCycle(spark, cfg, at("2026-05-01T12:00:00Z"))
     assert(r1.rowsProcessed == 2L)
-    val store1 = Sinks.readFingerprints(spark, cfg.sinkRoot, cid,
-      Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
+    val store1 = BatchStore(Sinks.fingerprintsDir(cfg.sinkRoot, cid))
+      .read(spark, Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
     assert(store1.count() == 2L, "cycle 1 recorded both content fps")
 
     // cycle 2 data: one DUPLICATE of tA, one novel row
@@ -1752,8 +1762,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batchId2 = Lineage.batchId(asOf2, wms, cid)
     val delta = Discover.delta(spark, cfg, asOf2, wms)
     val piped = Pipeline(delta.as[Turn], cfg.excludePattern)
-    val seen = Sinks.readFingerprints(spark, cfg.sinkRoot, cid,
-      committedAtStart).get
+    val seen = BatchStore(Sinks.fingerprintsDir(cfg.sinkRoot, cid))
+      .read(spark, committedAtStart).get
     val routedPartial = graft.ops.Dedup.reRouteSeen(piped, seen,
       Route.contentSinks, Route.duplicateSink)
     Sinks.writeStaged(routedPartial, cfg.sinkRoot, batchId2, cfg.saltBuckets)
@@ -1788,8 +1798,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"cycle 3 screens against cycle 2's committed fps, got $dup3")
     // b1 (a duplicate) must NOT have re-recorded tA's fp; store rows
     // stay one per distinct content fp
-    val store3 = Sinks.readFingerprints(spark, cfg.sinkRoot, cid,
-      Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
+    val store3 = BatchStore(Sinks.fingerprintsDir(cfg.sinkRoot, cid))
+      .read(spark, Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
     assert(store3.distinct().count() == 3L,
       "store = {tA, tB, tC}: duplicate-sink rows never re-record fps")
   }
@@ -1823,9 +1833,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Row("other", 0, "u", "t", null, ts0, "2025-09-01"))
 
     val committed = Set("a", "b")
-    assert(!Sinks.compactViolations(spark, root, cid, committed,
-      maxDirs = 16), "below threshold: no-op")
-    assert(Sinks.compactViolations(spark, root, cid, committed, maxDirs = 2))
+    val census = BatchStore(Sinks.violationsDir(root, cid))
+    assert(!census.compact(spark, committed, maxDirs = 16,
+      mergeSchema = true), "below threshold: no-op")
+    assert(census.compact(spark, committed, maxDirs = 2, mergeSchema = true))
     val dirs = Sinks.batchDirs(spark, Sinks.violationsDir(root, cid))
     assert(dirs.size == 1 && dirs.head.contains("batch=compacted-"),
       s"got $dirs")

@@ -19,8 +19,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import spark.implicits._
 
   private val scratch =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "streamspec").toString
+    graft.TestDirs.temp("streamspec").toString
 
   override def afterAll(): Unit = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
@@ -271,9 +270,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Streaming.StreamFingerprints.read(spark, root, 3L)
       .collect().map(_.getString(0)).sorted.toSeq == Seq("fp0", "fp1", "fp2"),
       "read strictly-before 3 = deltas 0..2")
-    // compaction at batch 5 folds only ids < 5; batch=4... all of 0..4
-    // are < 5, so with maxDirs=2 they fold into one compacted dir
-    assert(Streaming.StreamFingerprints.compact(spark, root, 5L, maxDirs = 2))
+    // compaction at batch 5 folds only ids < 5 (the streaming gate);
+    // all of 0..4 are < 5, so they fold into one compacted dir
+    val fpDir = Streaming.StreamFingerprints.dir(root)
+    def foldAt(batchId: Long): Unit =
+      BatchStore(fpDir).fold(spark, Streaming.before(spark, fpDir, batchId),
+        Nil)(ds => spark.read.parquet(ds: _*).distinct())
+    assert(Streaming.before(spark, fpDir, 5L).length > 2)
+    foldAt(5L)
     val dirs = new java.io.File(Streaming.StreamFingerprints.dir(root))
       .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
     assert(dirs.length == 1 && dirs.head.startsWith("batch=compacted-"),
@@ -286,7 +290,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must not see its own write): batch 5 writes, compacts — its dir
     // survives even past the threshold
     Streaming.StreamFingerprints.write(delta("fp5"), root, 5L)
-    Streaming.StreamFingerprints.compact(spark, root, 5L, maxDirs = 0)
+    foldAt(5L)
     val after = new java.io.File(Streaming.StreamFingerprints.dir(root))
       .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
     assert(after.contains("batch=5"),
