@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** THE committed-batch store: a namespace dir holding one `batch=<id>`
   * child dir per batch. This file is the one owner of that layout —
@@ -76,10 +77,14 @@ final case class BatchStore(dir: String) {
 
   /** The committed rows, None when no dir is readable (the schema is
     * the namespace's, so there is no honest empty frame to fabricate).
+    * A namespace with a fixed `schema` is read with it, which skips the
+    * Spark job that parquet schema inference launches per read.
     */
-  def read(spark: SparkSession, committed: Set[String]): Option[DataFrame] = {
+  def read(spark: SparkSession, committed: Set[String],
+      schema: Option[StructType] = None): Option[DataFrame] = {
     val dirs = committedDirs(spark, committed)
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    if (dirs.isEmpty) None
+    else Some(schema.fold(spark.read)(spark.read.schema).parquet(dirs: _*))
   }
 
   /** Fold the committed history into one snapshot once the namespace

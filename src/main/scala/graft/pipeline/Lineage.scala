@@ -61,13 +61,19 @@ object Lineage {
 
   /** All committed lineage rows; empty DataFrame if no checkpoint exists
     * yet (the "empty sincedb file reads as epoch, no exception" semantic,
-    * sincedb_spec.rb:14-16, s3.rb:455-459).
+    * sincedb_spec.rb:14-16, s3.rb:455-459). Read with the [[Commit]]
+    * schema rather than an inferred one: inference costs a Spark job per
+    * read, and a commit file that predates a column (`committed_at`)
+    * reads that column as null.
     */
   private def readAt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    if (exists(spark, dir)) spark.read.parquet(dir)
+    if (exists(spark, dir)) spark.read.schema(commitSchema).parquet(dir)
     else spark.emptyDataset[Commit].toDF()
   }
+
+  private val commitSchema =
+    org.apache.spark.sql.Encoders.product[Commit].schema
 
   /** Watermarks, observation stamps AND the committed-batch set from
     * ONE lineage read — the per-cycle lookup (the reference's 3.8.2

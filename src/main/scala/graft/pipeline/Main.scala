@@ -13,8 +13,17 @@ import org.apache.spark.sql.functions._
   * Lifecycle per cycle (SURVEY.md §3.1):
   *   read lineage once -> discover delta (watermark + cutoff predicates,
   *   partition-pruned scan) -> parse (grok columns + header propagation +
-  *   sessionization) -> enrich (broadcast joins) -> route -> staged sink
-  *   writes -> atomic publish -> aggregate metrics -> lineage commit.
+  *   sessionization) -> enrich (broadcast joins) -> route -> ONE
+  *   collected aggregate (watermarks, row counts, metric tables) ->
+  *   staged sink writes -> atomic publish -> stranded manifest and seal
+  *   audit, while the metric tables, fingerprints and archive copy are
+  *   written alongside -> lineage commit -> consumption mark ->
+  *   compactions.
+  *
+  * Three orderings carry weight, and nothing else is ordered: publish
+  * before the seal audit (it reads the in-flight batch's published
+  * keys); every write before the lineage commit; the consumption mark
+  * and the compactions after it.
   *
   * Re-running with no new data is a no-op (empty delta -> no publish, no
   * commit). A crash before the lineage commit leaves the checkpoint
@@ -94,13 +103,16 @@ object Main {
         cfg.excludePattern, cfg.chunkSize,
         codec = Pipeline.codecFor(cfg)))).cache()
 
-    // new per-day watermarks from the routed delta (one pass; also the
-    // emptiness check)
-    val newWms = routed.groupBy(col("day"))
-      .agg(max(col("ts")).as("mx"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2)))
-    val total = newWms.map(_._3).sum
+    // the batch's ONE aggregate, collected once (the action that
+    // materializes `routed`): the new per-day watermarks and row counts
+    // (also the emptiness check) and, in publishBatch, the metric
+    // tables all roll up from these rows on the driver. Collected HERE,
+    // not in a helper: a traced run attributes the routed action to the
+    // innermost program frame, and this one is the cycle's
+    val grain = Aggregate.grain(routed)
+    val cells = Aggregate.Cells(grain.schema, grain.collect().toSeq)
+    val newWms = cells.byDay
+    val total = cells.total
 
     // day-sealing policy (opt-in): once a day is `sealDaysGraceSeconds`
     // past its end at the injected clock, round its committed watermark
@@ -265,7 +277,7 @@ object Main {
     }.toSeq ++ sealCommits.filterNot(c => newDays.contains(c.day)) ++
       reopenCommits
     val published = publishBatch(spark, cfg, lineageDir, batchId, routed,
-      commits, () => writeStranded())
+      cells, commits, () => writeStranded())
     routed.unpersist()
     CycleResult(batchId, total, published)
   }
@@ -425,7 +437,8 @@ object Main {
       routed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (!cfg.dedupAcrossCycles) routed
     else BatchStore(Sinks.fingerprintsDir(cfg.sinkRoot,
-        Lineage.checkpointId(cfg))).read(spark, committed)
+        Lineage.checkpointId(cfg)))
+      .read(spark, committed, Some(Sinks.fingerprintSchema))
       // keepFp: the computed hash column rides along (hidden from every
       // user-facing write — publishBatch drops it before staging) so
       // the fingerprint-store write reuses it instead of re-hashing
@@ -434,40 +447,50 @@ object Main {
         Route.contentSinks, Route.duplicateSink, keepFp = true))
       .getOrElse(routed)
 
-  /** The publish discipline every batch (normal or re-driven) follows:
-    * staged write -> atomic publish -> archive copy (iff configured;
-    * BEFORE the commit, like the reference's backup-then-sincedb
-    * ordering s3.rb:169-183, 380-388) -> the caller's pre-commit hook
-    * (stranded manifest / redrive ledger) -> metrics -> lineage commit
-    * -> lineage compaction -> consumption mark (the `delete` analog,
-    * only after the commit succeeded — the reference likewise deletes
-    * last) -> deferred-namespace retirement. ONE definition so the two
-    * callers cannot drift (the redrive path re-converging on this
-    * sequence is how it got archive/metrics/consumption in the first
-    * place).
+  /** The publish discipline every batch (normal or re-driven) follows.
+    * Like the reference's finalize (s3.rb:376-396), what exactly-once
+    * rests on is that EVERY pre-commit output is safe before the lineage
+    * commit; the outputs have no order among themselves. So the
+    * independent ones — the metric tables, the fingerprint write (iff
+    * dedupAcrossCycles) and the archive copy (iff configured, the
+    * backup-then-sincedb step, s3.rb:169-183) — run side by side on the
+    * global pool while the calling thread runs staged write -> atomic
+    * publish -> the caller's pre-commit hook (stranded manifest and seal
+    * audit / redrive ledger), in that order: the audit reads the
+    * in-flight batch's published keys.
+    * Every write is joined before the lineage commit; if any failed,
+    * the first failure is rethrown once all have finished, and the
+    * commit never runs (a re-run overwrites each batch dir wholesale).
+    * After the commit: lineage compaction, the consumption mark (the
+    * `delete` analog, only after the commit succeeded — the reference
+    * likewise deletes last), then the store compactions. ONE definition
+    * so the two callers cannot drift.
     */
   private def publishBatch(spark: SparkSession, cfg: PipelineConfig,
       lineageDir: String, batchId: String,
       routed: org.apache.spark.sql.DataFrame,
+      cells: Aggregate.Cells,
       commits: Seq[Lineage.Commit],
       beforeCommit: () => Map[String, Timestamp]): Seq[String] = {
-    // the dedup stage's internal fp column never reaches a sink file
-    Sinks.writeStaged(routed.drop(graft.ops.Dedup.fpColName),
-      cfg.sinkRoot, batchId, cfg.saltBuckets)
-    val published = Sinks.publish(spark, cfg.sinkRoot, batchId)
-    if (cfg.backupAddPrefix != null && cfg.backupAddPrefix.nonEmpty)
-      Sinks.archive(routed, cfg.sinkRoot, batchId, cfg.backupAddPrefix,
+    // each lands in a batch dir that only counts once its batch commits
+    val sideWrites = Seq[() => Any](
+      () => Aggregate.writeAll(spark, cells, cfg.sinkRoot, batchId)) ++
+      Option.when(cfg.dedupAcrossCycles)(() => Sinks.writeFingerprints(
+        routed, cfg.sinkRoot, Lineage.checkpointId(cfg), batchId,
+        Route.contentSinks)) ++
+      Option.when(cfg.backupAddPrefix != null &&
+          cfg.backupAddPrefix.nonEmpty)(() => Sinks.archive(routed,
+        cfg.sinkRoot, batchId, cfg.backupAddPrefix,
         // faithful copy incl. the configured S6 metadata columns
         Seq(cfg.storageClassCol, cfg.restoreHeaderCol)
-          .filter(c => c != null && c.nonEmpty))
-    val absorb = beforeCommit()
-    // the dedup write side rides the same pre-commit window as the
-    // manifests/ledger: the fp dir only counts once its batch commits,
-    // and the idempotent re-run overwrites it wholesale
-    if (cfg.dedupAcrossCycles)
-      Sinks.writeFingerprints(routed, cfg.sinkRoot,
-        Lineage.checkpointId(cfg), batchId, Route.contentSinks)
-    Aggregate.writeAll(routed, cfg.sinkRoot, batchId)
+          .filter(c => c != null && c.nonEmpty)))
+    val (published, absorb) = alongside(sideWrites) {
+      // the dedup stage's internal fp column never reaches a sink file
+      Sinks.writeStaged(routed.drop(graft.ops.Dedup.fpColName),
+        cfg.sinkRoot, batchId, cfg.saltBuckets)
+      val published = Sinks.publish(spark, cfg.sinkRoot, batchId)
+      (published, beforeCommit())
+    }
     Lineage.commitAt(spark, lineageDir, absorbInto(commits, absorb))
     Lineage.compactAt(spark, lineageDir) // no-op until history accumulates
     if (cfg.deleteAfterProcess)
@@ -488,6 +511,28 @@ object Main {
           .compact(spark, committedNow)
     }
     published
+  }
+
+  /** Runs `body` on the calling thread while `writes` run on the global
+    * pool (the Future idiom of Queries.q11), and returns `body`'s value
+    * only once every write has finished. On any failure it still waits
+    * for all of them, then rethrows the first (body's first, the others
+    * suppressed into it): nothing is left running when it returns or
+    * throws.
+    */
+  private def alongside[T](writes: Seq[() => Any])(body: => T): T = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val running = writes.map(w => Future(w()))
+    val result = try Right(body) catch { case e: Throwable => Left(e) }
+    val failures = result.left.toSeq ++ running.flatMap(f =>
+      scala.util.Try(Await.result(f, Duration.Inf)).failed.toOption)
+    failures.headOption.foreach { e =>
+      failures.tail.foreach(e.addSuppressed)
+      throw e
+    }
+    result.toOption.get
   }
 
   /** Contract-violation census: rows violating the row contract — null
@@ -687,18 +732,19 @@ object Main {
         cfg.excludePattern, cfg.chunkSize,
         codec = Pipeline.codecFor(cfg))))
       .cache()
+    // the same one aggregate as a cycle: commit rows and metric tables.
     // committed_at = epoch, NOT now: committed_at is the day-dir
     // observation stamp behind the sealed-day reopen check
     // (Lineage.stateAt), and a redrive observes only manifest
     // keys — advancing a sealed day's stamp here would let a backfill
     // that landed just before this commit slip past the next reopen
     // check unaudited
-    val days = eligibleNow.groupBy(col("day"))
-      .agg(max(col("ts")).as("mx"), count(lit(1)).as("n")).collect()
-      .map(r => Lineage.Commit(batchId, r.getString(0), r.getTimestamp(1),
-        r.getLong(2), Lineage.epoch)).toSeq
+    val grain = Aggregate.grain(routed)
+    val cells = Aggregate.Cells(grain.schema, grain.collect().toSeq)
+    val days = cells.byDay.map { case (d, mx, n) =>
+      Lineage.Commit(batchId, d, mx, n, Lineage.epoch) }
     val published = publishBatch(spark, cfg, lineageDir, batchId, routed,
-      days,
+      cells, days,
       // ledger BEFORE commit — see the crash-window analysis above
       // (a redrive manifests nothing, so no watermark absorption)
       () => {

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Staged, idempotent multi-sink publish (S13-S17).
   *
@@ -158,6 +159,10 @@ object Sinks {
   def fingerprintsDir(root: String, checkpointId: String): String =
     s"$root/_fingerprints/$checkpointId"
 
+  /** The fingerprint store's one column, [[writeFingerprints]]' `fp`. */
+  val fingerprintSchema: StructType =
+    StructType(Seq(StructField("fp", StringType)))
+
   /** Record the batch's content-sink fingerprints (the dedup write
     * side). Distinct per batch — within-batch multiplicity is not the
     * store's business; one row per fp bounds the store by corpus
@@ -226,7 +231,7 @@ object Sinks {
     */
   def publishedKeys(spark: SparkSession, root: String,
       days: Set[String], committed: Set[String]): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, IntegerType, StructType, StructField}
+    import org.apache.spark.sql.types.IntegerType
     val keySchema = StructType(Seq(
       StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
       StructField("day", StringType)))

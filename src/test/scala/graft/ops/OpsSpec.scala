@@ -727,6 +727,18 @@ class OpsSpec extends AnyFunSuite {
     fullRes.release()
   }
 
+  test("resolveClusters rejects maxIters < 1 up front with a message, " +
+      "not an NPE from an empty iteration") {
+    val pairs = Seq(("a", "b")).toDF("id_a", "id_b")
+    Seq(0, -1).foreach { m =>
+      val e = intercept[IllegalArgumentException](
+        Dedup.resolveClustersIter(pairs, maxIters = m))
+      assert(e.getMessage.contains("at least one propagation iteration"))
+      intercept[IllegalArgumentException](
+        Dedup.resolveClusters(pairs, maxIters = m))
+    }
+  }
+
   test("VideoCodec: synthetic MP4s decode to their closed forms on both " +
       "version parities; hostile blobs (truncated, non-ftyp, corrupt " +
       "2^32 size, undersized box) classify, never throw or hang") {

@@ -565,6 +565,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batches =
       Lineage.committedBatchesAt(spark, Lineage.path(s"$scratch/nonexistent"))
     assert(batches.isEmpty)
+    val empty = s"$scratch/empty_lineage"
+    assert(new java.io.File(empty).mkdirs())
+    assert(Lineage.stateAt(spark, empty) == ((Map.empty, Map.empty, Set.empty)))
+    // a commit file that predates `committed_at` reads it as null: its
+    // watermark counts, its day has no observation stamp
+    val old = s"$scratch/old_lineage"
+    Seq(("b0", "2025-01-01", new Timestamp(1000L), 3L))
+      .toDF("batch_id", "day", "last_ts", "rows").write.parquet(old)
+    assert(Lineage.stateAt(spark, old) ==
+      ((Map("2025-01-01" -> new Timestamp(1000L)), Map.empty, Set("b0"))))
   }
 
   test("error resilience: a missing/empty input table yields 0 events, no " +
@@ -2042,6 +2052,173 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       !offCols.contains("media_checksum") &&
       !offCols.contains("media_thumb"),
       "feature columns are strictly opt-in")
+  }
+
+  /** Rows of batch `id` in every sink that holds it, `sink` as a column
+    * (a sink dir stores its rows without it); None if no sink does.
+    */
+  private def publishedRows(root: String,
+      id: String): Option[org.apache.spark.sql.DataFrame] =
+    (Route.sinkNames :+ Route.duplicateSink).flatMap { s =>
+      val d = BatchStore(s"$root/$s").batchDir(id)
+      if (!new java.io.File(d).exists()) None
+      else Some(spark.read.parquet(d).withColumn("sink", lit(s)))
+    }.reduceOption(_ unionByName _)
+
+  /** (conv_id, turn_idx) of every committed row across the sinks,
+    * `duplicate` and the `_deferred` manifests.
+    */
+  private def deliveredKeys(root: String, cid: String): Seq[(String, Int)] = {
+    val committed = Lineage.stateAt(spark, Lineage.path(root))._3
+    ((Route.sinkNames :+ Route.duplicateSink).map(s => s"$root/$s") :+
+        Sinks.deferredDir(root, cid))
+      .flatMap(d => BatchStore(d).committedDirs(spark, committed))
+      .map(d => spark.read.parquet(d).select($"conv_id", $"turn_idx"))
+      .reduce(_ union _)
+      .as[(String, Int)].collect().toSeq
+  }
+
+  test("_metrics tables equal the Aggregate functions over each committed " +
+      "batch's published rows, across sealing, cross-cycle dedup and a " +
+      "crash re-run, with a null role and an unmapped tool") {
+    def at(iso: String) = Timestamp.from(java.time.Instant.parse(iso))
+    val in = s"$scratch/mx_in"
+    val root = s"$scratch/mx_sinks"
+    // text role defaults to assistant: a null role column still parses.
+    // A copy carries its original's whole text line (`textIso`)
+    def row(c: String, i: Int, role: String, body: String, tool: String,
+        iso: String, textIso: String = null) =
+      (c, i, role, s"${Option(textIso).getOrElse(iso)} INFO " +
+        s"[${Option(role).getOrElse("assistant")}] $body",
+        tool, at(iso), iso.substring(0, 10))
+    def land(rows: (String, Int, String, String, String, Timestamp,
+        String)*): Unit =
+      rows.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "day")
+        .write.mode("append").partitionBy("day").parquet(in)
+    land(
+      row("m1", 0, "user", "alpha", null, "2026-07-01T09:10:00Z"),
+      row("m1", 1, null, "beta", null, "2026-07-01T09:20:00Z"),
+      row("m1", 2, "tool", "gamma", "mystery_tool", "2026-07-01T10:05:00Z"),
+      row("m2", 0, "tool", "delta", "search", "2026-07-01T11:00:00Z"),
+      row("m2", 1, "user", "eta", null, "2026-07-01T11:30:00Z"))
+    val cfg = PipelineConfig(in, root, sealDaysGraceSeconds = 3600,
+      dedupAcrossCycles = true)
+    val cid = Lineage.checkpointId(cfg)
+    val tables = Seq(
+      "by_sink_role" -> Aggregate.bySinkRole _,
+      "by_sink_tool_category" -> Aggregate.bySinkToolCategory _,
+      "by_sink_hour" -> Aggregate.bySinkHour _)
+    assert(Main.runCycle(spark, cfg, at("2026-07-01T18:00:00Z"))
+      .rowsProcessed == 5L)
+
+    // day 2, with a copy of "alpha" (re-routes to duplicate); the cycle
+    // also seals day 1
+    land(
+      row("n1", 0, "user", "alpha", null, "2026-07-02T08:00:00Z",
+        "2026-07-01T09:10:00Z"),
+      row("n2", 0, null, "epsilon", "mystery_tool", "2026-07-02T09:00:00Z"),
+      row("n3", 0, "tool", "zeta", "python", "2026-07-02T09:45:00Z"))
+    val asOf2 = at("2026-07-02T18:00:00Z")
+    // a crashed attempt of that cycle: a partial publish and stale metric
+    // tables under the same batch id, no lineage commit
+    val (wms, _, _) = Lineage.stateAt(spark, Lineage.dirFor(cfg))
+    val batchId2 = Lineage.batchId(asOf2, wms, cid)
+    val torn = Pipeline(Discover.delta(spark, cfg, asOf2, wms).as[Turn],
+      cfg.excludePattern).filter($"conv_id" === "n2")
+    Sinks.writeStaged(torn, root, batchId2, cfg.saltBuckets)
+    Sinks.publish(spark, root, batchId2)
+    tables.foreach { case (n, f) =>
+      f(torn).write.mode("overwrite").parquet(s"$root/_metrics/$batchId2/$n")
+    }
+    val r2 = Main.runCycle(spark, cfg, asOf2)
+    assert(r2.batchId == batchId2 && r2.rowsProcessed == 3L)
+    assert(Main.runCycle(spark, cfg, at("2026-07-02T19:00:00Z"))
+      .rowsProcessed == 0L, "an empty poll")
+    // day 3; the cycle also seals day 2
+    land(row("p1", 0, "user", "theta", null, "2026-07-03T07:00:00Z"))
+    assert(Main.runCycle(spark, cfg, at("2026-07-04T02:00:00Z"))
+      .rowsProcessed == 1L)
+
+    val committed = Lineage.stateAt(spark, Lineage.path(root))._3
+    val batches = committed.toSeq.flatMap(b => publishedRows(root, b)
+      .map(b -> _))
+    assert(batches.size == 3, "three committed batches published rows")
+    assert(batches.map(_._1).toSet == committed.filter(b =>
+      new java.io.File(s"$root/_metrics/$b").exists()),
+      "metric tables exist for exactly the batches that published rows")
+    for ((b, rows) <- batches; (name, f) <- tables) {
+      val got = spark.read.parquet(s"$root/_metrics/$b/$name")
+      val want = f(rows)
+      assert(got.schema.map(c => c.name -> c.dataType) ==
+        want.schema.map(c => c.name -> c.dataType), s"$b/$name schema")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"$b/$name rows")
+    }
+    val all = batches.map(_._2).reduce(_ unionByName _)
+    assert(all.filter($"role".isNull).count() == 2 &&
+      all.filter($"tool_category".isNull && $"tool".isNotNull).count() == 2,
+      "null grouping keys are exercised")
+    assert(all.filter($"sink" === Route.duplicateSink).count() == 1)
+  }
+
+  test("a failed side write keeps the lineage commit from running; the " +
+      "re-run reproduces the batch id and delivers every row exactly once") {
+    def at(iso: String) = Timestamp.from(java.time.Instant.parse(iso))
+    val in = s"$scratch/sw_in"
+    val root = s"$scratch/sw_sinks"
+    // a copy carries its original's whole text line (`textIso`)
+    def row(c: String, body: String, cls: String, iso: String,
+        textIso: String = null) =
+      (c, 0, "user", s"${Option(textIso).getOrElse(iso)} INFO [user] $body",
+        null: String, at(iso), cls, null: String, iso.substring(0, 10))
+    def land(rows: (String, Int, String, String, String, Timestamp,
+        String, String, String)*): Unit =
+      rows.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts",
+          "storage_class", "restore_hdr", "day")
+        .write.mode("append").partitionBy("day").parquet(in)
+    // a GLACIER row behind the watermark lands in _deferred
+    land(row("w1", "alpha", "STANDARD", "2026-08-01T10:00:00Z"),
+      row("w2", "beta", "STANDARD", "2026-08-01T11:00:00Z"),
+      row("c1", "cold one", "GLACIER", "2026-08-01T09:00:00Z"))
+    val cfg = PipelineConfig(in, root, storageClassCol = "storage_class",
+      restoreHeaderCol = "restore_hdr", sealDaysGraceSeconds = 3600,
+      dedupAcrossCycles = true)
+    val cid = Lineage.checkpointId(cfg)
+    val lineageDir = Lineage.dirFor(cfg)
+
+    // a regular file where the fingerprint store's dir belongs: the
+    // fingerprint write fails while the staged write, publish and
+    // manifest on the calling thread succeed
+    val blocker = new java.io.File(Sinks.fingerprintsDir(root, cid))
+    blocker.getParentFile.mkdirs()
+    assert(blocker.createNewFile())
+    val asOf1 = at("2026-08-01T18:00:00Z")
+    val before = Lineage.stateAt(spark, lineageDir)
+    val failedId = Lineage.batchId(asOf1, before._1, cid)
+    intercept[Exception](Main.runCycle(spark, cfg, asOf1))
+    assert(Lineage.stateAt(spark, lineageDir) == before,
+      "no commit after a failed write")
+    assert(new java.io.File(BatchStore(s"$root/user").batchDir(failedId))
+      .exists(), "the calling thread's publish ran")
+    assert(Sinks.readSink(spark, root, "user").count() == 0L,
+      "the uncommitted publish is invisible")
+
+    assert(blocker.delete())
+    val r1 = Main.runCycle(spark, cfg, asOf1)
+    assert(r1.batchId == failedId && r1.rowsProcessed == 2L)
+    // day 2: a copy of "alpha" and another cold row; day 1 seals
+    land(row("d1", "alpha", "STANDARD", "2026-08-02T10:00:00Z",
+        "2026-08-01T10:00:00Z"),
+      row("d2", "gamma", "STANDARD", "2026-08-02T11:00:00Z"),
+      row("d3", "cold two", "GLACIER", "2026-08-02T09:00:00Z"))
+    assert(Main.runCycle(spark, cfg, at("2026-08-02T18:00:00Z"))
+      .rowsProcessed == 2L)
+
+    val got = deliveredKeys(root, cid)
+    assert(got.sorted == Seq("c1", "d1", "d2", "d3", "w1", "w2").map(_ -> 0),
+      s"every row exactly once, got $got")
+    assert(Sinks.readSink(spark, root, Route.duplicateSink)
+      .select($"conv_id").as[String].collect().toSeq == Seq("d1"))
   }
 
   private def write2(dest: String,
